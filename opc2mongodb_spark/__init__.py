@@ -10,15 +10,20 @@ Python UDFs only where built-ins genuinely cannot express the semantics
 (and then Arrow-batched pandas UDFs, never row-at-a-time).
 """
 
-from opc2mongodb_spark.engine import Engine
-from opc2mongodb_spark.pipelines import (
-    CurationResult,
-    curate_corpus,
-    experiment_readout,
-    monitor_readout,
-    user_features,
-)
-from opc2mongodb_spark.session import get_spark
+import importlib
+
+# Public name -> defining module. Resolved on first access (PEP 562), so
+# importing a submodule — the Python worker daemon entry, or a Spark worker
+# unpickling a data source — does not load the engine, pipelines and pandas.
+_EXPORTS = {
+    "CurationResult": "opc2mongodb_spark.pipelines",
+    "Engine": "opc2mongodb_spark.engine",
+    "curate_corpus": "opc2mongodb_spark.pipelines",
+    "experiment_readout": "opc2mongodb_spark.pipelines",
+    "monitor_readout": "opc2mongodb_spark.pipelines",
+    "get_spark": "opc2mongodb_spark.session",
+    "user_features": "opc2mongodb_spark.pipelines",
+}
 
 __all__ = [
     "CurationResult",
@@ -30,3 +35,12 @@ __all__ = [
     "user_features",
 ]
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    module = _EXPORTS.get(name)
+    if module is None:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(module), name)
+    globals()[name] = value
+    return value

@@ -148,6 +148,18 @@ def coerce_value(col: Column, type_name: str) -> Column:
     )
 
 
+def _type_key(type_col: Column) -> Column:
+    return F.lower(F.trim(type_col))
+
+
+def is_supported_type(type_col: Column) -> Column:
+    """True where ``coerce_value_dynamic`` yields a value for the declared
+    type name, NULL/false where it yields NULL (unsupported or NULL name).
+    Filtering on this instead of the coerced struct keeps the optimizer from
+    evaluating the whole CASE a second time below the projection."""
+    return _type_key(type_col).isin(list(TYPE_FAMILY))
+
+
 def coerce_value_dynamic(col: Column, type_col: Column, lenient: bool = True) -> Column:
     """Row-level type dispatch: coerce by a *column* of declared type names.
 
@@ -156,7 +168,7 @@ def coerce_value_dynamic(col: Column, type_col: Column, lenient: bool = True) ->
     code-generated — versus the reference's per-record branch in C#.
     Unsupported names yield NULL struct (caller filters, mirroring the drop).
     """
-    tname = F.lower(F.trim(type_col))
+    tname = _type_key(type_col)
     expr = None
     for family, fn in _FAMILY_FN.items():
         names = [n for n, f in TYPE_FAMILY.items() if f == family]

@@ -19,7 +19,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from opc2mongodb_spark.functions.coercion import coerce_value, coerce_value_dynamic
+from opc2mongodb_spark.functions.coercion import (
+    coerce_value,
+    coerce_value_dynamic,
+    is_supported_type,
+)
 
 OPC_QUALITY_GOOD = 192  # OPC-DA quality code; reference defaults Bad (Program.cs:966)
 OPC_QUALITY_BAD = 0
@@ -86,9 +90,11 @@ def events_as_opc_values(events: DataFrame) -> DataFrame:
 def raw_to_opc_values(raw: DataFrame) -> DataFrame:
     """Normalize the opcsim wire format (sources/opc.py RAW_SCHEMA) into the
     canonical opc_values frame — the runtime type-dispatch path (reference
-    Program.cs:137-443 switch, here one CASE expression). Unsupported
-    dataType names null out and are dropped, mirroring the reference's
-    "READ UNSUPPORTED TYPE" drop (Program.cs:718-720).
+    Program.cs:137-443 switch, here one CASE expression). Rows whose
+    dataType name is unsupported (or NULL) are dropped by a filter on the
+    name, mirroring the reference's "READ UNSUPPORTED TYPE" drop
+    (Program.cs:718-720); filtering on the coerced value instead would run
+    the CASE twice per row.
 
     INTENTIONAL wire-schema divergence: timestamps stay ZONED TimestampType
     (inherited from RAW_SCHEMA) rather than OPC_VALUE_SCHEMA's
@@ -109,7 +115,7 @@ def raw_to_opc_values(raw: DataFrame) -> DataFrame:
             "serverTimestamp",
             "quality",
         )
-        .filter(F.col("_v").isNotNull())
+        .filter(is_supported_type(F.col("dataType")))
         .select(
             "server",
             "tag",

@@ -9,6 +9,9 @@ right default on a large multi-executor cluster reading ~100 TB:
 - Arrow enabled for any pandas-UDF path (the only sanctioned Python hot path).
 - shuffle.partitions left to AQE coalescing from a modest initial value in
   local mode; on a real cluster this would be ~2-3x total cores.
+- Python workers fork from ``opc2mongodb_spark.pydaemon``, which keeps each
+  zip archive's directory cached across tasks instead of re-reading
+  pyspark.zip and the Spark jar before every task (README, "Python workers").
 """
 
 from __future__ import annotations
@@ -26,6 +29,10 @@ from pyspark.sql import SparkSession
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+
+# Python worker daemon entry (pydaemon.py): the stock pyspark.daemon with
+# zipimport's per-task archive re-read skipped for unchanged archives.
+PYTHON_DAEMON_MODULE = "opc2mongodb_spark.pydaemon"
 
 
 def build_session_conf(
@@ -82,6 +89,7 @@ def build_session_conf(
         # --- Python boundary: Arrow everywhere ------------------------------
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.python.daemon.module": PYTHON_DAEMON_MODULE,
         # quieter driver logs in the harness
         "spark.ui.enabled": "false",
     }

@@ -27,6 +27,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from opc2mongodb_spark.operators.last_value import last_value_per_key
 
@@ -79,12 +80,17 @@ class CurrentValuesStore:
         # via the constructor or conf spark.sparkGraft.sinkParquetCodec.
         self.parquet_codec = parquet_codec
 
-    def read(self, spark: SparkSession) -> DataFrame | None:
+    def read(
+        self, spark: SparkSession, schema: StructType | None = None
+    ) -> DataFrame | None:
+        """The stored table, or None before the first merge. ``schema``
+        (parquet backend) skips schema inference."""
         if not os.path.exists(self.path):
             return None
         if self.backend == "delta":
             return spark.read.format("delta").load(self.path)  # pragma: no cover - delta absent here
-        return spark.read.parquet(self.path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self.path)
 
     def merge_batch(self, batch: DataFrame) -> None:
         if self.backend == "delta":
@@ -153,7 +159,12 @@ class CurrentValuesStore:
         servers = [r[0] for r in batch.select(pcol).distinct().collect()]
         if not servers:
             return
-        existing = self.read(spark)
+        # The batch's schema is the store's: reading with it skips the
+        # footer-inference job a schema-less parquet read runs per batch.
+        # Partition columns come back last, so restore the batch's order.
+        existing = self.read(spark, schema=batch.schema)
+        if existing is not None:
+            existing = existing.select(*batch.columns)
         # _src tiebreak: on an order_col tie the BATCH row wins — the same
         # semantics as the Delta MERGE's `s.order >= t.order` condition, and
         # deterministic (max_by alone picks an arbitrary row on ties).

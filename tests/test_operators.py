@@ -4545,3 +4545,28 @@ def test_edge_bin_matches_bisect(spark, edges, vals):
     ]
     expect = [1 + bisect.bisect_left(es, float(v)) for v in sorted(vals)]
     assert got == expect
+
+
+def test_raw_to_opc_values_evaluates_coercion_case_once(spark):
+    """The unsupported-type drop filters on the declared type name, not on
+    the coerced struct: the optimized plan holds the coercion CASE once (a
+    filter on the struct is pushed below the projection and evaluates the
+    whole CASE twice per row) and drops the same rows, NULL types
+    included."""
+    from opc2mongodb_spark.opcmodel import raw_to_opc_values
+    from opc2mongodb_spark.sources.opc import RAW_SCHEMA
+
+    raw = spark.createDataFrame(
+        [
+            ("s", "a", "Double", "1.5", None, None, 192),
+            ("s", "b", "weird", "x", None, None, 0),
+            ("s", "c", None, "1", None, None, 0),
+            ("s", "d", " BOOLEAN ", "true", None, None, 192),
+        ],
+        RAW_SCHEMA,
+    )
+    out = raw_to_opc_values(raw)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("CASE WHEN lower(trim(dataType") == 1, plan
+    got = sorted((r["tag"], r["doubleValue"]) for r in out.collect())
+    assert got == [("a", 1.5), ("d", 1.0)]
